@@ -2,12 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-level session tuning shared by every main (Bench, TimeKeys,
-  * Verify, Smoke), so the timed surface and the correctness surface run
-  * the IDENTICAL engine configuration.
+/** Engine-level session configuration shared by every main (Bench,
+  * Verify, Smoke, TimeKeys, ExplainAudit, ScaleUp), so the timed
+  * surface and the correctness surface run the IDENTICAL engine
+  * configuration.
   *
-  * r19 join tuning (optimization guide §3.1 / §9), each knob
-  * env-parameterized with a production-defensible local default:
+  * r19 join tuning (optimization guide §3.1 / §9):
   *
   *  - `spark.sql.join.preferSortMergeJoin=false` — lets the planner pick
   *    shuffled-hash over sort-merge when its size conditions hold
@@ -26,14 +26,22 @@ import org.apache.spark.sql.SparkSession
   * rel_merge_upsert 0.34→0.27 s, llm_semdedup 0.22→0.15 s, others
   * within noise, no measured regression (an apparent triangle_count
   * regression did not reproduce at 5 passes).
-  *
-  * Overridable for probes: `SPARK_GRAFT_PREFER_SMJ=true`,
-  * `SPARK_GRAFT_SHJ_LOCALMAP=0` restore stock planning.
   */
 object EngineConf {
   def tune(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.join.preferSortMergeJoin",
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-    .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
+    .config("spark.sql.join.preferSortMergeJoin", "false")
+    .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+
+  /** The one session factory: `local[cpus]` with as many shuffle
+    * partitions, UTC session time, no UI, WARN logging, [[tune]]d. */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
+    val spark = tune(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,22 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump every query's formatted plan for scale auditing.
   * Usage: runMain graft.ExplainAudit <sfDir> <outDir> [key,key,...] —
   * the optional third arg restricts the dump to a key subset. */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val keep: String => Boolean =
-      if (args.length > 2) args(2).split(",").toSet else (_ => true)
-    val spark = EngineConf.tune(SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val keys =
+      if (args.length <= 2) SparkEntry.queries.keys.toSeq.sorted
+      else args(2).split(",").toSeq.distinct.sorted
+    val unknown = keys.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown key(s): ${unknown.mkString(", ")}")
+    val spark = EngineConf.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1).filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+    keys.foreach { name =>
+      val fn = SparkEntry.queries(name)
       try {
         val plan = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

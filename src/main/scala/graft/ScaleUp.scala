@@ -40,13 +40,7 @@ object ScaleUp {
     val dst = if (args.length > 1) args(1) else "/tmp/testdata/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session(cpus)
 
     def off(df: DataFrame, key: String): Long =
       pow10Above(df.agg(max(col(key))).head().getLong(0))

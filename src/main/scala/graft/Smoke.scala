@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke main mirroring the driver's entry check: SparkEntry.entry
   * on sf0.001 must return > 0 rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = EngineConf.tune(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session("4")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

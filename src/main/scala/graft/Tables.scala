@@ -179,44 +179,7 @@ object Tables {
     * (no reload round-trip — save/load is value-faithful by contract). */
   private[graft] def artifact[T](dir: String, key: String)(build: => T)(
       save: (T, String) => Unit)(load: String => T): T =
-    indexRoot match {
-      case None => build
-      case Some(root) =>
-        val dh = sha(new java.io.File(dir).getAbsolutePath).take(12)
-        val safeKey = key.replaceAll("[^a-zA-Z0-9_.-]", "_")
-        val parent = new java.io.File(root, dh)
-        val kdir = new java.io.File(parent, s"${safeKey}__${fingerprint(dir)}")
-        // Load is best-effort too: a torn/corrupt stored copy (or one a
-        // concurrent cleanup deleted between isDirectory and load)
-        // rebuilds instead of throwing.
-        val loaded: Option[T] =
-          if (kdir.isDirectory)
-            try Some(load(kdir.getAbsolutePath))
-            catch {
-              case scala.util.control.NonFatal(_) =>
-                try rmTree(kdir) catch { case _: Throwable => () }
-                None
-            }
-          else None
-        loaded match {
-          case Some(v) =>
-            // hit path sweeps too (r17 ADVICE): a key never rebuilt
-            // again would otherwise keep its superseded fingerprint
-            // dirs forever — the sweep is one listFiles, age-gated
-            dropStale(parent, safeKey, kdir.getName)
-            v
-          case None =>
-            val v = build
-            val tmp = new java.io.File(parent,
-              s".${kdir.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-            try {
-              save(v, tmp.getAbsolutePath)
-              if (!tmp.renameTo(kdir)) rmTree(tmp)
-              if (kdir.isDirectory) dropStale(parent, safeKey, kdir.getName)
-            } catch { case _: Throwable => rmTree(tmp) } // persistence is best-effort
-            v
-        }
-    }
+    stored(dir, key, build, save, load, reload = false)
 
   /** Grace window before a SUPERSEDED fingerprint directory is deleted.
     * A concurrent JVM may hold a lazy DataFrame over the old artifact
@@ -241,58 +204,89 @@ object Tables {
       .foreach(rmTree)
   }
 
+  /** The one publish path behind [[index]] and [[artifact]] (layout
+    * and atomic rename as documented above): load on a hit, else build
+    * → `save` into a temp dir → rename; a `save` that writes nothing
+    * publishes nothing. Both paths sweep superseded fingerprints (r17
+    * ADVICE: a key never rebuilt again would otherwise keep them
+    * forever). BEST-EFFORT end to end: an unreadable stored copy (torn
+    * write, concurrent cleanup) is dropped and rebuilt, and an
+    * unwritable root (disk full, bad SPARK_GRAFT_INDEX_DIR) returns the
+    * built value — neither fails the caller. `reload` serves a fresh
+    * publish through `load`, so a hit and a miss hand out one form. */
+  private def stored[T](dir: String, key: String, build: => T,
+      save: (T, String) => Unit, load: String => T, reload: Boolean): T =
+    indexRoot match {
+      case None => build
+      case Some(root) =>
+        val parent = new java.io.File(root,
+          sha(new java.io.File(dir).getAbsolutePath).take(12))
+        val safeKey = key.replaceAll("[^a-zA-Z0-9_.-]", "_")
+        val kdir = new java.io.File(parent, s"${safeKey}__${fingerprint(dir)}")
+        val hit =
+          if (!kdir.isDirectory) None
+          else try Some(load(kdir.getAbsolutePath)) catch {
+            case scala.util.control.NonFatal(_) => rmTree(kdir); None
+          }
+        hit match {
+          case Some(v) =>
+            dropStale(parent, safeKey, kdir.getName)
+            v
+          case None =>
+            val v = build
+            val tmp = new java.io.File(parent,
+              s".${kdir.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+            try {
+              save(v, tmp.getAbsolutePath)
+              if (!tmp.renameTo(kdir)) rmTree(tmp)
+              if (!kdir.isDirectory) v
+              else {
+                dropStale(parent, safeKey, kdir.getName)
+                if (reload) load(kdir.getAbsolutePath) else v
+              }
+            } catch { case scala.util.control.NonFatal(_) => rmTree(tmp); v }
+        }
+    }
+
   def index(spark: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame =
     memo(spark, dir, key) {
-      indexRoot match {
-        case None => build
-        case Some(root) =>
-          val dh = sha(new java.io.File(dir).getAbsolutePath).take(12)
-          val safeKey = key.replaceAll("[^a-zA-Z0-9_.-]", "_")
-          val parent = new java.io.File(root, dh)
-          val kdir = new java.io.File(parent, s"${safeKey}__${fingerprint(dir)}")
-          // Persistence is BEST-EFFORT end to end (the artifact contract):
-          // an unreadable stored copy (torn write, concurrent cleanup) or
-          // an unwritable root (disk full, bad SPARK_GRAFT_INDEX_DIR) must
-          // degrade to plain memo behavior, never fail the query.
-          val loaded: Option[DataFrame] =
-            if (kdir.isDirectory)
-              try Some(spark.read.parquet(kdir.getAbsolutePath))
-              catch {
-                case scala.util.control.NonFatal(_) =>
-                  // unreadable stored copy: drop it so the rebuild below
-                  // can publish (its rename would collide otherwise)
-                  try rmTree(kdir) catch { case _: Throwable => () }
-                  None
-              }
-            else None
-          loaded match {
-            case Some(df) =>
-              // hit path sweeps superseded fingerprints too (r17
-              // ADVICE) — see artifact()'s identical rationale
-              dropStale(parent, safeKey, kdir.getName)
-              df
-            case None =>
-            val built = build
-            if (!built.schema.fields.forall(f => sqlOnly(f.dataType))) built
-            else {
-              val tmp = new java.io.File(parent,
-                s".${kdir.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-              try {
-                built.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-                if (!tmp.renameTo(kdir)) rmTree(tmp) // concurrent winner (or failure)
-                if (kdir.isDirectory) {
-                  dropStale(parent, safeKey, kdir.getName)
-                  spark.read.parquet(kdir.getAbsolutePath)
-                } else built
-              } catch {
-                case scala.util.control.NonFatal(_) =>
-                  try rmTree(tmp) catch { case _: Throwable => () }
-                  built // best-effort
-              }
-            }
-          }
+      stored[DataFrame](dir, key, build,
+        (df, p) =>
+          if (df.schema.fields.forall(f => sqlOnly(f.dataType))) // UDTs stay memo-only
+            df.write.mode("overwrite").parquet(p),
+        spark.read.parquet(_), reload = true)
+    }
+
+  /** Work-root FIXTURE: table state a key reads (or clones) on every
+    * call but that is identical across calls, built once per (session,
+    * corpus, `tag`) under `<workRoot(tag)>/<dir leaf>/` and returned as
+    * that directory. Contract: a `_ready` marker holding
+    * [[fingerprint]]`(dir)` is written only AFTER `build` returns, so a
+    * build that throws (or a crash) leaves no marker and the next call
+    * rebuilds; a corpus regenerated mid-session changes the fingerprint
+    * and rebuilds too. Every miss starts from an empty directory. The
+    * lock is per fixture directory, so fixtures whose builds provision
+    * other fixtures nest without contention, and concurrent callers of
+    * one fixture build it once. */
+  def fixture(spark: SparkSession, dir: String, tag: String)(
+      build: String => Unit): String = {
+    val fdir = new java.io.File(workRoot(spark, tag), new java.io.File(dir).getName)
+    val ready = new java.io.File(fdir, "_ready")
+    fixtureLocks.computeIfAbsent(fdir.getAbsolutePath, _ => new Object).synchronized {
+      val fp = fingerprint(dir)
+      if (!(ready.isFile &&
+          new String(java.nio.file.Files.readAllBytes(ready.toPath), "UTF-8") == fp)) {
+        rmTree(fdir)
+        fdir.mkdirs()
+        build(fdir.getAbsolutePath)
+        java.nio.file.Files.write(ready.toPath, fp.getBytes("UTF-8"))
       }
     }
+    fdir.getAbsolutePath
+  }
+
+  private val fixtureLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Per-SESSION scratch directory for queries that materialize work
     * tables (fimi round-trips, snapshot/time-travel rebuilds, format
@@ -342,7 +336,8 @@ object Tables {
 
   private val workRoots = scala.collection.mutable.Set.empty[java.io.File]
   private val workRootsLock = new Object
-  private def rmTree(f: java.io.File): Unit = {
+  /** Recursive delete; missing paths are a no-op. */
+  private[graft] def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
     f.delete(): Unit
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only targeted timer: times just the keys given as args on
   * SPARK_GRAFT_SF_DIR (default sf0.1), reporting min over `passes`
@@ -11,15 +10,8 @@ object TimeKeys {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: TimeKeys <key> [key ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    val spark = EngineConf.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session()
     def step(body: => Unit): Unit = try body catch { case _: Throwable => () }
     step { operators.Mining.warm(spark, sfDir) }
     step { operators.LlmOps.warm(spark, sfDir) }

@@ -198,10 +198,10 @@ object Mining {
     * a KeyGroupedPartitioning v2 scan participates (none elsewhere). */
   def fpmFimiSpj(s: SparkSession, dir: String): DataFrame = {
     val sfName = new java.io.File(dir).getName
-    val root = fimiSpjFixture(s, dir)
     s.conf.set("spark.sql.catalog.graft_spj", "graft.catalog.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_spj.root", root)
+    s.conf.set("spark.sql.catalog.graft_spj.root", Tables.workRoot(s, "graft_fimi_spj"))
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    fimiSpjFixture(s, dir)
     val ta = s.table(s"graft_spj.`$sfName`.ba")
     val tb = s.table(s"graft_spj.`$sfName`.bb")
       .select(col("tid"), element_at(col("items"), 1).as("grp"))
@@ -300,42 +300,18 @@ object Mining {
       .orderBy("item")
   }
 
-  /** Shared harness for the SQL row-level-DML keys: commit the corpus
-    * baskets as a fimi SNAPSHOT work table (3 part files, so the
-    * copy-on-write group granularity is visible), register a
-    * [[graft.catalog.GraftCatalog]] over the per-session work root, and
-    * return the catalog-qualified table name. The catalog confs persist
-    * deliberately (same reasoning as [[fpmFimiSpj]]: the returned frame
-    * is lazy, so they must hold at execution; they are inert elsewhere). */
-  /** One-time per (session, corpus) snapshot TEMPLATE the DML keys
-    * clone from: deriving and WRITING the 3-file basket table is the
-    * dominant cost of each DML key at scale (measured 60–70 % of the
-    * 16–25 s per key at sf10), and it is identical across the four
-    * keys — only the mutation differs. Built under the session work
-    * root (same lifecycle/cleanup as the per-key tables). */
-  private val dmlTemplateLock = new Object
-  private def fimiDmlTemplate(s: SparkSession, dir: String): String = {
-    val sfName = new java.io.File(dir).getName
-    // the corpus FINGERPRINT rides the template path (r17 ADVICE): two
-    // corpora sharing a leaf name, or one regenerated mid-session, must
-    // never reuse a stale template — a changed fingerprint lands in a
-    // fresh directory and the stale one is simply never read again
-    val base = s"${Tables.workRoot(s, "graft_fimi_dml_tmpl")}/$sfName-" +
-      s"${Tables.fingerprint(dir)}/t.fimi"
-    dmlTemplateLock.synchronized {
-      if (!new java.io.File(base, "_fimi_log").isDirectory) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(base))
-        baskets(s, dir).repartition(3)
-          .write.format("fimi").option("snapshots", "true")
-          .mode("overwrite").save(base)
-      }
-    }
-    base
-  }
+  /** One-time per (session, corpus) snapshot [[Tables.fixture]] the DML
+    * keys clone from: deriving and WRITING the 3-file basket table
+    * (3 part files, so the copy-on-write group granularity is visible)
+    * is the dominant cost of each DML key at scale (measured 60–70 % of
+    * the 16–25 s per key at sf10), and it is identical across the DML
+    * keys — only the mutation differs. */
+  private def fimiDmlTemplate(s: SparkSession, dir: String): String =
+    Tables.fixture(s, dir, "graft_fimi_dml_tmpl") { d =>
+      baskets(s, dir).repartition(3)
+        .write.format("fimi").option("snapshots", "true")
+        .mode("overwrite").save(s"$d/t.fimi")
+    } + "/t.fimi"
 
   /** Hardlink-CLONE of an immutable fimi table directory: data files are
     * hardlinked (copy-on-write DML/OPTIMIZE never mutates a committed
@@ -345,11 +321,7 @@ object Mining {
     * preserved, so positional tids are identical to a fresh write — the
     * clone is bit-equivalent table state. */
   private def cloneFimiDir(src: String, dest: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(dest))
+    Tables.rmTree(new java.io.File(dest))
     val tmpl = new java.io.File(src)
     val bd = new java.io.File(dest)
     bd.mkdirs()
@@ -374,7 +346,9 @@ object Mining {
     * the per-key root, and return the catalog-qualified name PLUS the
     * table's directory (one source of truth for the layout — a
     * path-based consumer like the change feed must never re-derive it
-    * and silently diverge). */
+    * and silently diverge). The catalog confs persist deliberately
+    * (same reasoning as [[fpmFimiSpj]]: the returned frame is lazy, so
+    * they must hold at execution; they are inert elsewhere). */
   private def fimiDmlTable(
       s: SparkSession, dir: String, tag: String, cat: String,
       src: Option[String] = None): (String, String) = {
@@ -387,186 +361,99 @@ object Mining {
     // the clone REPLACED the table directory: a previously-registered
     // catalog instance may cache the old incarnation's Table (schema
     // included — the evolve key ALTERs per call), so drop that entry
-    // like any external rewrite (the invalidateTable contract)
-    s.sessionState.catalogManager.catalog(cat)
-      .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
-      .invalidateTable(
-        org.apache.spark.sql.connector.catalog.Identifier.of(Array(sfName), "t"))
-    (s"$cat.`$sfName`.t", base)
+    // like any external rewrite. REFRESH runs with `s` active: a
+    // catalogManager lookup from here would read the ACTIVE session's
+    // conf, where `cat` may not be registered (CATALOG_NOT_FOUND).
+    val t = s"$cat.`$sfName`.t"
+    s.sql(s"REFRESH TABLE $t")
+    (t, base)
   }
 
-  /** One-time per (session, corpus) PROVISIONED co-bucketed table pair
-    * for [[fpmFimiSpj]] — the same fixture-decomposition policy as
-    * [[fimiCdfFixture]] (r18 VERDICT task 1, extended in r19): the SPJ
-    * key's claim is the shuffle-free storage-partitioned JOIN read, and
-    * the join never mutates the tables, so re-writing both bucketed
-    * tables per call re-priced write work `fpm_fimi_roundtrip`/`_dsv2`
-    * already measure. Fingerprint-stamped ready marker: a corpus
-    * regenerated mid-session (or a crash mid-provision) rebuilds; the
-    * catalog entries are invalidated on rebuild like any external
-    * rewrite. */
-  private val spjFixtureLock = new Object
-  private def fimiSpjFixture(s: SparkSession, dir: String): String =
-    spjFixtureLock.synchronized {
-      val sfName = new java.io.File(dir).getName
-      val root = Tables.workRoot(s, "graft_fimi_spj")
-      val ready = new java.io.File(s"$root/$sfName/_spj_ready")
-      val fp = Tables.fingerprint(dir)
-      val current = ready.isFile &&
-        new String(java.nio.file.Files.readAllBytes(ready.toPath), "UTF-8") == fp
-      if (!current) {
-        ready.delete()
-        new java.io.File(root, sfName).mkdirs()
-        val b = baskets(s, dir)
-        b.write.format("fimi").option("buckets", "8").mode("overwrite")
-          .save(s"$root/$sfName/ba.fimib")
-        b.select(col("tid"),
-            array(concat(lit("g"), (col("tid") % 3).cast("string"))).as("items"))
-          .write.format("fimi").option("buckets", "8").mode("overwrite")
-          .save(s"$root/$sfName/bb.fimib")
-        // the rewrite replaced the table dirs: drop any cached Table the
-        // registered catalog still serves for the previous incarnation
-        if (s.conf.getOption("spark.sql.catalog.graft_spj").isDefined) {
-          val cat = s.sessionState.catalogManager.catalog("graft_spj")
-            .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
-          Seq("ba", "bb").foreach(t => cat.invalidateTable(
-            org.apache.spark.sql.connector.catalog.Identifier.of(Array(sfName), t)))
-        }
-        java.nio.file.Files.write(ready.toPath, fp.getBytes("UTF-8"))
-      }
-      root
+  /** One-time per (session, corpus) co-bucketed table pair for
+    * [[fpmFimiSpj]] — the fixture-decomposition policy (r18 VERDICT
+    * task 1, extended in r19): the SPJ key's claim is the shuffle-free
+    * storage-partitioned JOIN read, and the join never mutates the
+    * tables, so re-writing both bucketed tables per call re-priced
+    * write work `fpm_fimi_roundtrip`/`_dsv2` already measure. The
+    * caller registers the `graft_spj` catalog first; a rebuild
+    * refreshes its entries like any external rewrite. */
+  private def fimiSpjFixture(s: SparkSession, dir: String): Unit =
+    Tables.fixture(s, dir, "graft_fimi_spj") { d =>
+      val b = baskets(s, dir)
+      b.write.format("fimi").option("buckets", "8").mode("overwrite")
+        .save(s"$d/ba.fimib")
+      b.select(col("tid"),
+          array(concat(lit("g"), (col("tid") % 3).cast("string"))).as("items"))
+        .write.format("fimi").option("buckets", "8").mode("overwrite")
+        .save(s"$d/bb.fimib")
+      val ns = new java.io.File(d).getName
+      Seq("ba", "bb").foreach(t => s.sql(s"REFRESH TABLE graft_spj.`$ns`.$t"))
     }
 
-  /** One-time per (session, corpus) PROVISIONED change-feed fixture:
-    * the cloned snapshot work table driven through the fixed
-    * INSERT (v1) → copy-on-write DELETE (v2) → copy-on-write UPDATE
-    * (v3) commit sequence [[fpmFimiChanges]] reads back. Built once and
-    * shared because the feed keys only READ the manifest history — a
-    * change-feed scan never mutates the log — while re-provisioning per
-    * call would re-price DML work the dedicated DML keys already
-    * measure (r18 VERDICT task 1: ≈80 % of the key's bench time was
-    * provisioning). The `_cdf_ready` marker (holding the corpus
-    * fingerprint) commits the provisioning AFTER the third DML lands,
-    * so a crash mid-provision rebuilds rather than serving a
-    * half-mutated fixture, and a corpus regenerated mid-session lands
-    * in a fresh build (the DML-template fingerprint rule). */
-  private val cdfFixtureLock = new Object
+  /** One-time per (session, corpus) change-feed fixture: the cloned
+    * snapshot work table driven through the fixed INSERT (v1) →
+    * copy-on-write DELETE (v2) → copy-on-write UPDATE (v3) commit
+    * sequence [[fpmFimiChanges]] reads back. Shared because the feed
+    * keys only READ the manifest history — a change-feed scan never
+    * mutates the log — while re-provisioning per call would re-price DML
+    * work the dedicated DML keys already measure (r18 VERDICT task 1:
+    * ≈80 % of the key's bench time was provisioning). */
   private def fimiCdfFixture(s: SparkSession, dir: String): String =
-    cdfFixtureLock.synchronized {
-      val sfName = new java.io.File(dir).getName
-      val root = Tables.workRoot(s, "graft_fimi_cdf")
-      val ready = new java.io.File(s"$root/$sfName/_cdf_ready")
-      val fp = Tables.fingerprint(dir)
-      val current = ready.isFile &&
-        new String(java.nio.file.Files.readAllBytes(ready.toPath), "UTF-8") == fp
-      if (!current) {
-        ready.delete()
-        val (t, path) = fimiDmlTable(s, dir, "graft_fimi_cdf", "graft_dml_cdf")
-        s.sql(s"INSERT INTO $t VALUES (-10L, array('zz_cdf'))")
-        s.sql(s"DELETE FROM $t WHERE array_contains(items, 'Brand#23')")
-        s.sql(
-          s"UPDATE $t SET items = array_union(items, array('zz_upd')) " +
-            "WHERE size(items) >= 7")
-        java.nio.file.Files.write(ready.toPath, fp.getBytes("UTF-8"))
-        path
-      } else s"$root/$sfName/t.fimi"
-    }
+    Tables.fixture(s, dir, "graft_fimi_cdf") { _ =>
+      val (t, _) = fimiDmlTable(s, dir, "graft_fimi_cdf", "graft_dml_cdf")
+      s.sql(s"INSERT INTO $t VALUES (-10L, array('zz_cdf'))")
+      s.sql(s"DELETE FROM $t WHERE array_contains(items, 'Brand#23')")
+      s.sql(
+        s"UPDATE $t SET items = array_union(items, array('zz_upd')) " +
+          "WHERE size(items) >= 7")
+    } + "/t.fimi"
 
-  /** One-time per (session, corpus) PROVISIONED post-evolve/post-UPDATE
-    * template for [[fpmFimiZorder]] (r20, same fixture policy as
-    * [[fimiCdfFixture]]): the evolve + whole-table COW back-fill is
-    * identical every call and is data-plane work `fpm_fimi_update` /
-    * `fpm_fimi_evolve` already price, while the zorder key's claim is
-    * the CLUSTERED REWRITE. OPTIMIZE mutates the log, so each timed
-    * call clones this template rather than sharing it. Fingerprint-
-    * stamped ready marker: corpus regenerated mid-session (or a crash
-    * mid-provision) rebuilds. */
-  private val zoTemplateLock = new Object
+  /** One-time per (session, corpus) post-evolve/post-UPDATE template
+    * for [[fpmFimiZorder]] (r20, the [[fimiCdfFixture]] policy): the
+    * evolve + whole-table COW back-fill is identical every call and is
+    * data-plane work `fpm_fimi_update` / `fpm_fimi_evolve` already
+    * price, while the zorder key's claim is the CLUSTERED REWRITE.
+    * OPTIMIZE mutates the log, so each timed call clones this template
+    * rather than sharing it. */
   private def fimiZoTemplate(s: SparkSession, dir: String): String =
-    zoTemplateLock.synchronized {
-      val sfName = new java.io.File(dir).getName
-      val root = Tables.workRoot(s, "graft_fimi_zo_tmpl")
-      val ready = new java.io.File(s"$root/$sfName/_zo_ready")
-      val fp = Tables.fingerprint(dir)
-      val current = ready.isFile &&
-        new String(java.nio.file.Files.readAllBytes(ready.toPath), "UTF-8") == fp
-      if (!current) {
-        ready.delete()
-        val (t, path) = fimiDmlTable(s, dir, "graft_fimi_zo_tmpl", "graft_dml_zot")
-        s.sql(s"ALTER TABLE $t ADD COLUMN q BIGINT")
-        s.sql(s"UPDATE $t SET q = CAST(size(items) AS BIGINT)")
-        java.nio.file.Files.write(ready.toPath, fp.getBytes("UTF-8"))
-        path
-      } else s"$root/$sfName/t.fimi"
-    }
+    Tables.fixture(s, dir, "graft_fimi_zo_tmpl") { _ =>
+      val (t, _) = fimiDmlTable(s, dir, "graft_fimi_zo_tmpl", "graft_dml_zot")
+      s.sql(s"ALTER TABLE $t ADD COLUMN q BIGINT")
+      s.sql(s"UPDATE $t SET q = CAST(size(items) AS BIGINT)")
+    } + "/t.fimi"
 
   /** One-time per (session, corpus) over-filed 24-part snapshot
     * template for [[fpmFimiCompact]] — the shape a streaming sink's
     * per-epoch commits leave behind, written once (write-path work
     * `fpm_fimi_roundtrip`/`_dsv2` already price) and hardlink-cloned
     * per timed call (compaction mutates the log). */
-  private val compactTemplateLock = new Object
   private def fimiCompactTemplate(s: SparkSession, dir: String): String =
-    compactTemplateLock.synchronized {
-      val sfName = new java.io.File(dir).getName
-      val root = Tables.workRoot(s, "graft_fimi_compact_tmpl")
-      val base = s"$root/$sfName/t.fimi"
-      val ready = new java.io.File(s"$root/$sfName/_compact_ready")
-      val fp = Tables.fingerprint(dir)
-      val current = ready.isFile &&
-        new String(java.nio.file.Files.readAllBytes(ready.toPath), "UTF-8") == fp
-      if (!current) {
-        ready.delete()
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(base))
-        baskets(s, dir).repartition(24)
-          .write.format("fimi").option("snapshots", "true")
-          .mode("overwrite").save(base)
-        java.nio.file.Files.write(ready.toPath, fp.getBytes("UTF-8"))
-      }
-      base
-    }
+    Tables.fixture(s, dir, "graft_fimi_compact_tmpl") { d =>
+      baskets(s, dir).repartition(24)
+        .write.format("fimi").option("snapshots", "true")
+        .mode("overwrite").save(s"$d/t.fimi")
+    } + "/t.fimi"
 
-  /** One-time per (session, corpus) PROVISIONED time-travel fixture for
+  /** One-time per (session, corpus) time-travel fixture for
     * [[fpmFimiTimetravel]]: the v0 snapshot + decoy append + truncating
     * reset commit history the key reads back. The versionAsOf read
     * never mutates the log, so the fixture is shared across calls like
     * [[fimiCdfFixture]]; version numbers stay deterministic (always
-    * 0/1/2 — a fingerprint change rebuilds from scratch). */
-  private val ttFixtureLock = new Object
+    * 0/1/2 — every rebuild starts from an empty directory). */
   private def fimiTtFixture(s: SparkSession, dir: String): String =
-    ttFixtureLock.synchronized {
-      val sfName = new java.io.File(dir).getName
-      val root = Tables.workRoot(s, "graft_fimi_tt")
-      val base = s"$root/$sfName/t.fimi"
-      val ready = new java.io.File(s"$root/$sfName/_tt_ready")
-      val fp = Tables.fingerprint(dir)
-      val current = ready.isFile &&
-        new String(java.nio.file.Files.readAllBytes(ready.toPath), "UTF-8") == fp
-      if (!current) {
-        ready.delete()
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(base))
-        val b = baskets(s, dir)
-        // v0: the genuine snapshot
-        b.write.format("fimi").option("snapshots", "true")
-          .mode("overwrite").save(base)
-        // v1: decoy flood — zz_decoy's support would be 100% if it leaked
-        b.select(array(lit("zz_decoy")).as("items"))
-          .write.format("fimi").mode("append").save(base)
-        // v2: truncating reset — latest generation is disjoint from v0
-        s.range(1).select(array(lit("zz_reset")).as("items"))
-          .write.format("fimi").mode("overwrite").save(base)
-        java.nio.file.Files.write(ready.toPath, fp.getBytes("UTF-8"))
-      }
-      base
-    }
+    Tables.fixture(s, dir, "graft_fimi_tt") { d =>
+      val base = s"$d/t.fimi"
+      val b = baskets(s, dir)
+      // v0: the genuine snapshot
+      b.write.format("fimi").option("snapshots", "true")
+        .mode("overwrite").save(base)
+      // v1: decoy flood — zz_decoy's support would be 100% if it leaked
+      b.select(array(lit("zz_decoy")).as("items"))
+        .write.format("fimi").mode("append").save(base)
+      // v2: truncating reset — latest generation is disjoint from v0
+      s.range(1).select(array(lit("zz_reset")).as("items"))
+        .write.format("fimi").mode("overwrite").save(base)
+    } + "/t.fimi"
 
   /** Per-item supports of the table's LATEST snapshot — the common
     * read-back for the DML keys (unthresholded: every basket's content

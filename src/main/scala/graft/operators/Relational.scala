@@ -1284,11 +1284,7 @@ object Relational {
     val wh = s.conf.get("spark.sql.warehouse.dir")
     val path = try new java.net.URI(wh).getPath catch { case _: Exception => wh }
     val loc = new java.io.File(if (path != null) path else wh, name.toLowerCase)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) { val cs = f.listFiles(); if (cs != null) cs.foreach(rm) }
-      f.delete(): Unit
-    }
-    if (loc.exists()) rm(loc)
+    Tables.rmTree(loc)
   }
 
   /** Bucketed-layout creation, once per (session, sf dir) — the same

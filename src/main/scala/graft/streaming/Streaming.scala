@@ -663,11 +663,7 @@ object Streaming {
     val root = new java.io.File(
       Tables.workRoot(s, "graft_fimi_sink"),
       new java.io.File(dir).getName).getAbsolutePath
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(root))
+    Tables.rmTree(new java.io.File(root))
     Tables.load(s, dir, "events")
       .select(array(col("event_type"),
         concat(lit("u"), (col("user_id") % 10).cast("string"))).as("items"))
@@ -708,11 +704,7 @@ object Streaming {
     // component is the NAMESPACE, never the catalog root (the root is
     // pinned at the catalog's first instantiation in a session)
     val wc = Tables.fimiWorkCatalog(s, "graft_fimi_tbl", "graft_stbl", dir)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(wc.nsDir))
+    Tables.rmTree(new java.io.File(wc.nsDir))
     new java.io.File(wc.nsDir).mkdirs()
     val src = s"${wc.prefix}.src"
     val sink = s"${wc.prefix}.sink"
@@ -773,11 +765,7 @@ object Streaming {
     // accumulating one ck-<uuid> dir per call under the long-lived
     // fixture namespace
     val ck = new java.io.File(ckRoot, "ck")
-    def rmCk(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmCk)
-      f.delete(): Unit
-    }
-    rmCk(ck)
+    Tables.rmTree(ck)
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     val q = s.readStream.format("fimi")
       .option(FimiChanges.FromOption, 1)
@@ -808,45 +796,28 @@ object Streaming {
       .orderBy("version", "change", "item")
   }
 
-  /** One-time per (session, corpus) PROVISIONED change-feed source for
-    * [[streamFimiChanges]]: event baskets staged as a snapshot table
-    * (v0), copy-on-write DELETE (v1) and UPDATE (v2) — the commit
-    * history every call's drain replays. Returns (table path, the
-    * namespace dir fresh per-call checkpoints go under). The
-    * `_cdc_ready` marker holds the corpus fingerprint and is written
-    * AFTER the second DML lands: a crash mid-provision (or a corpus
-    * regenerated mid-session) rebuilds instead of serving a
-    * half-mutated fixture. */
-  private val cdcFixtureLock = new Object
-  private def cdcFixture(s: SparkSession, dir: String): (String, String) =
-    cdcFixtureLock.synchronized {
-      val wc = Tables.fimiWorkCatalog(s, "graft_fimi_cdc", "graft_scdc", dir)
-      val path = s"${wc.nsDir}/src.fimi"
-      val ready = new java.io.File(wc.nsDir, "_cdc_ready")
-      val fp = Tables.fingerprint(dir)
-      val current = ready.isFile &&
-        new String(java.nio.file.Files.readAllBytes(ready.toPath), "UTF-8") == fp
-      if (!current) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(wc.nsDir))
-        new java.io.File(wc.nsDir).mkdirs()
-        val src = s"${wc.prefix}.src"
-        Tables.load(s, dir, "events")
-          .select(array(col("event_type"),
-            concat(lit("u"), (col("user_id") % 10).cast("string"))).as("items"))
-          .repartition(4)
-          .write.format("fimi").option("snapshots", "true")
-          .mode("overwrite").save(path)                                      // v0
-        s.sql(s"DELETE FROM $src WHERE array_contains(items, 'purchase')")   // v1
-        s.sql(s"UPDATE $src SET items = array_union(items, array('zz_s')) " +
-          "WHERE array_contains(items, 'u3')")                               // v2
-        java.nio.file.Files.write(ready.toPath, fp.getBytes("UTF-8"))
-      }
-      (path, wc.nsDir)
+  /** One-time per (session, corpus) [[Tables.fixture]] change-feed
+    * source for [[streamFimiChanges]]: event baskets staged as a
+    * snapshot table (v0), copy-on-write DELETE (v1) and UPDATE (v2) —
+    * the commit history every call's drain replays. Returns (table
+    * path, the namespace dir fresh per-call checkpoints go under). */
+  private def cdcFixture(s: SparkSession, dir: String): (String, String) = {
+    val wc = Tables.fimiWorkCatalog(s, "graft_fimi_cdc", "graft_scdc", dir)
+    val path = s"${wc.nsDir}/src.fimi"
+    Tables.fixture(s, dir, "graft_fimi_cdc") { _ =>
+      val src = s"${wc.prefix}.src"
+      Tables.load(s, dir, "events")
+        .select(array(col("event_type"),
+          concat(lit("u"), (col("user_id") % 10).cast("string"))).as("items"))
+        .repartition(4)
+        .write.format("fimi").option("snapshots", "true")
+        .mode("overwrite").save(path)                                      // v0
+      s.sql(s"DELETE FROM $src WHERE array_contains(items, 'purchase')")   // v1
+      s.sql(s"UPDATE $src SET items = array_union(items, array('zz_s')) " +
+        "WHERE array_contains(items, 'u3')")                               // v2
     }
+    (path, wc.nsDir)
+  }
 
   def streamRunningSeq(s: SparkSession, dir: String): DataFrame =
     runningSeq(Tables.load(s, dir, "events"))

@@ -1031,5 +1031,95 @@ class ContractSpec extends SparkSpec {
       assert(v == Seq(0L, 1L, 2L))
       assert(builds == 3)
     } finally Tables.indexRootOverride = prev
+
+    // Tables.artifact shares the publish path: a corrupt stored value
+    // rebuilds, an unwritable root answers from the build
+    var abuilds = 0
+    def artifact(key: String) = Tables.artifact(dir, key) { abuilds += 1; "v1" }(
+      (v, p) => { new java.io.File(p).mkdirs()
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(p, "v"), v) })(
+      p => { val v = java.nio.file.Files.readString(java.nio.file.Paths.get(p, "v"))
+        require(v == "v1", s"corrupt artifact: $v"); v })
+    val akey = bkey + "_art"
+    assert(artifact(akey) == "v1" && artifact(akey) == "v1")
+    assert(abuilds == 1, s"stored artifact was not served ($abuilds builds)")
+    indexDirsFor(akey).foreach(kd =>
+      java.nio.file.Files.writeString(kd.toPath.resolve("v"), "garbage"))
+    assert(artifact(akey) == "v1")
+    assert(abuilds == 2, s"corrupt artifact was not rebuilt ($abuilds builds)")
+    assert(artifact(akey) == "v1" && abuilds == 2, "rebuilt artifact was not republished")
+    try {
+      Tables.indexRootOverride = Some(Some(badRoot.toString))
+      assert(artifact(akey + "_2") == "v1")
+      assert(abuilds == 3)
+    } finally Tables.indexRootOverride = prev
+  }
+
+  test("Tables.fixture: a build that throws leaves no marker; the next call rebuilds from empty") {
+    val tag = s"fxspec_${java.util.UUID.randomUUID().toString.take(8)}"
+    intercept[IllegalStateException] {
+      Tables.fixture(spark, sf, tag) { d =>
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(d, "part-0"), "torn")
+        throw new IllegalStateException("build crashed after writing data")
+      }
+    }
+    val fdir = new java.io.File(Tables.workRoot(spark, tag), new java.io.File(sf).getName)
+    assert(new java.io.File(fdir, "part-0").isFile && !new java.io.File(fdir, "_ready").exists,
+      "a failed build must leave its data but no ready marker")
+    var builds = 0
+    def complete(): String = Tables.fixture(spark, sf, tag) { d =>
+      builds += 1
+      Seq("part-1", "part-2").foreach(f =>
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(d, f), "ok"))
+    }
+    val d = complete()
+    assert(builds == 1, "the marker-less fixture was not rebuilt")
+    assert(new java.io.File(d).list().toSet == Set("part-1", "part-2", "_ready"),
+      "the rebuild did not start from an empty directory")
+    assert(complete() == d && builds == 1, "a ready fixture was rebuilt")
+  }
+
+  test("Tables.fixture: a changed corpus rebuilds; concurrent callers build once") {
+    val copy = java.nio.file.Files.createTempDirectory("graft-fxcorpus").resolve("sfcopy")
+    copy.toFile.mkdirs()
+    new java.io.File(sf).listFiles().filter(_.getName.endsWith(".parquet")).foreach(f =>
+      java.nio.file.Files.copy(f.toPath, copy.resolve(f.getName),
+        java.nio.file.StandardCopyOption.COPY_ATTRIBUTES))
+    val dir = copy.toString
+    val tag = s"fxspec_${java.util.UUID.randomUUID().toString.take(8)}"
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def call(): String = Tables.fixture(spark, dir, tag) { d =>
+      builds.incrementAndGet()
+      Thread.sleep(200) // widen the race window
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(d, "data"), Tables.fingerprint(dir))
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val fs = (1 to 2).map(_ => pool.submit(() => call()))
+      assert(fs.map(_.get()).distinct.size == 1)
+    } finally pool.shutdown()
+    assert(builds.get == 1, s"two concurrent callers built ${builds.get} times")
+    call()
+    assert(builds.get == 1)
+    def bump(): Unit = {
+      val f = copy.resolve("nation.parquet").toFile
+      assert(f.setLastModified(f.lastModified() + 60000))
+    }
+    bump()
+    val d = call()
+    assert(builds.get == 2, "a changed corpus served the stale fixture")
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(d, "data")) ==
+      Tables.fingerprint(dir))
+    // end to end through a fixture-backed key: its marker follows the corpus
+    val ready = java.nio.file.Paths.get(Tables.workRoot(spark, "graft_fimi_tt"), "sfcopy", "_ready")
+    def tt() = SparkEntry.queries("fpm_fimi_timetravel")(spark, dir)
+      .collect().map(_.toString).sorted.toSeq
+    val before = tt()
+    val fp0 = java.nio.file.Files.readString(ready)
+    bump()
+    val after = tt()
+    assert(java.nio.file.Files.readString(ready) == Tables.fingerprint(dir) &&
+      Tables.fingerprint(dir) != fp0, "the key's fixture was not rebuilt")
+    assert(after.nonEmpty && after == before)
   }
 }

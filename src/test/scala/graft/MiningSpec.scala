@@ -595,16 +595,31 @@ class MiningSpec extends SparkSpec {
   }
 
   test("fixture-decomposed maintenance keys are call-idempotent (r20)") {
-    // zorder/compact/timetravel provision their table state once per
-    // (session, corpus) and clone (or share, for the read-only
-    // timetravel) per call — a second call in the same session must
-    // produce the IDENTICAL result set, or the fixture reuse leaked
-    // state between calls.
-    for (key <- Seq("fpm_fimi_zorder", "fpm_fimi_compact", "fpm_fimi_timetravel")) {
+    // these keys provision their table state once per (session, corpus)
+    // through Tables.fixture and clone (or share, for the read-only
+    // feed/SPJ/timetravel reads) per call — a second call in the same
+    // session must produce the IDENTICAL result set, or the fixture
+    // reuse leaked state between calls.
+    for (key <- Seq("fpm_fimi_zorder", "fpm_fimi_compact", "fpm_fimi_timetravel",
+        "fpm_fimi_changes", "fpm_fimi_spj", "stream_fimi_changes")) {
       val a = SparkEntry.queries(key)(spark, sf).collect().map(_.toString).sorted
       val b = SparkEntry.queries(key)(spark, sf).collect().map(_.toString).sorted
       assert(a.nonEmpty, s"$key returned no rows")
       assert(a.toSeq == b.toSeq, s"$key is not call-idempotent under its fixture")
     }
+  }
+
+  test("catalog-backed fimi keys answer in a non-active session as in the root session") {
+    // each key registers its work catalog on the session it is given;
+    // resolving that catalog must not depend on which session is ACTIVE
+    // (a catalogManager lookup from the key's body reads the active
+    // session's conf)
+    val keys = Seq("fpm_fimi_changes", "fpm_fimi_delete", "fpm_fimi_evolve",
+      "fpm_fimi_insert", "fpm_fimi_merge", "fpm_fimi_update", "fpm_fimi_zorder")
+    def rows(s: org.apache.spark.sql.SparkSession, key: String) =
+      SparkEntry.queries(key)(s, sf).collect().map(_.toString).sorted.toSeq
+    val root = keys.map(k => k -> rows(spark, k)).toMap
+    val other = spark.newSession()
+    for (k <- keys) assert(rows(other, k) == root(k), s"$k differs in a new session")
   }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # One-command reproduction of the full green state, for a fresh session:
 #
-#   tools/ci.sh            # compile + 268-key Verify + DuckDB oracle sweep
+#   tools/ci.sh            # compile + all-key Verify + DuckDB oracle sweep
 #                          #   at sf0.001 (~2 min)
 #   tools/ci.sh --full     # ... plus the entry smoke and the whole
 #                          #   scalatest suite (~10 min)
@@ -24,6 +24,15 @@ while [[ $# -gt 0 ]]; do
   esac
 done
 OUT=$(mktemp -d /tmp/graft_ci.XXXXXX)
+
+# Same environment as the tier-1 test command: offline sbt, one Spark
+# core per host core, and a driver heap capped at half the host's
+# memory (2-8 GiB) instead of build.sbt's 16g default.
+export COURSIER_MODE=offline
+export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=/root/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 
 echo "[ci] compile"
 sbt -batch compile
